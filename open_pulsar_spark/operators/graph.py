@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from open_pulsar_spark.materialize import pin, scoped_cache
 from open_pulsar_spark.registry import query
 from open_pulsar_spark.tables import load_table
 
@@ -118,14 +119,13 @@ def _weighted_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB this frame is the natural MATERIALIZED artifact (a
     table bucketed on u) — the keyed pin is the session-scoped form
     of that decision."""
-    from open_pulsar_spark.operators.dedup import _pin_keyed
 
-    we = _pin_keyed(
+    we = pin(
         "copurchase_wedges",
-        sf_dir,
         lambda: _copurchase_pair_rows(spark, sf_dir)
         .groupBy("u", "v")
         .agg(F.count("*").alias("w")),
+        key=sf_dir,
     )
     return we
 
@@ -195,14 +195,13 @@ def part_copurchase_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).unionAll(und.select(F.col("v").alias("src"), F.col("u").alias("dst"), "w"))
     deg = edges.groupBy("src").agg(F.sum("w").alias("deg_w"))
     # edge frame with the sender's degree attached once, reused every
-    # round; nodes reused every round + for teleport. Both persisted
-    # for the iteration and RELEASED before returning — the final
+    # round; nodes reused every round + for teleport. The final
     # top-PR_TOP rows are bounded, so they are materialized eagerly
-    # below and nothing cached leaks past this call.
-    ed = edges.join(deg, "src").select("src", "dst", "w", "deg_w").persist()
-    nodes = ed.select(F.col("src").alias("pk")).distinct().persist()
-    try:
-        n_nodes = nodes.count()  # scalar: also pins both caches
+    # below, inside the scope.
+    with scoped_cache() as cache:
+        ed = cache(edges.join(deg, "src").select("src", "dst", "w", "deg_w"))
+        nodes = cache(ed.select(F.col("src").alias("pk")).distinct())
+        n_nodes = nodes.count()  # scalar: also fills both caches
         if n_nodes == 0:
             # no part ever co-occurs with another: the oracle returns
             # an empty set for the same input — match it, don't divide
@@ -251,9 +250,6 @@ def part_copurchase_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         # materialize the PR_TOP-row result while the caches are live,
         # then hand back a local frame with the identical schema
         return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        ed.unpersist()
-        nodes.unpersist()
 
 
 # --------------------------------------------------------------------------
@@ -340,9 +336,8 @@ def copurchase_rec_hitrate(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate is rec-list/basket sized.
     """
     from open_pulsar_spark.operators.curation import _hash_raw_spark
-    from open_pulsar_spark.operators.dedup import _pin
 
-    tagged_b = _pin(
+    tagged_b = pin(
         "rec_baskets",
         _copurchase_baskets(spark, sf_dir).withColumn(
             "is_train",
@@ -484,10 +479,10 @@ def part_copurchase_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     lower = (F.col("du") < F.col("dv")) | (
         (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
     )
-    # oe has a SINGLE consumer now (the adjacency groupBy): the
-    # oriented edge list the triangle join needs re-derives MAP-SIDE
-    # from adj itself (explode of the cached neighbor arrays), so the
-    # r12 oe.persist() and its extra exchange into the s-join are gone.
+    # oe has a SINGLE consumer (the adjacency groupBy): the oriented
+    # edge list the triangle join needs re-derives MAP-SIDE from adj
+    # itself (explode of the cached neighbor arrays), so oe needs no
+    # cache and no extra exchange into the s-join.
     oe = (
         eu.join(deg.select(F.col("n").alias("u"), F.col("d").alias("du")), "u")
         .join(deg.select(F.col("n").alias("v"), F.col("d").alias("dv")), "v")
@@ -496,8 +491,8 @@ def part_copurchase_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when(lower, F.col("v")).otherwise(F.col("u")).alias("t"),
         )
     )
-    adj = oe.groupBy("s").agg(F.collect_list("t").alias("nbrs")).persist()
-    try:
+    with scoped_cache() as cache:
+        adj = cache(oe.groupBy("s").agg(F.collect_list("t").alias("nbrs")))
         # materialization barrier: the triangle join below reads adj
         # from BOTH sides of one job — two concurrent shuffle-map
         # stages racing an unmaterialized cache recompute it (the
@@ -554,8 +549,6 @@ def part_copurchase_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # bounded result: materialize while the caches are live
         return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        adj.unpersist()
 
 
 # --------------------------------------------------------------------------
@@ -786,15 +779,12 @@ def part_bundle_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the SHRINKING keep-set (AQE broadcasts it when small);
     the edge frame persists across rounds. TakeOrdered top-k, integer
     ordering."""
-    edges = (
-        _weighted_edges(spark, sf_dir)
-        .where(F.col("w") >= BUNDLE_MIN_W)
-        .select("u", "v")
-        .persist()
-    )
-    try:
-        cur = edges
-        kept_caches = []
+    with scoped_cache() as cache:
+        cur = cache(
+            _weighted_edges(spark, sf_dir)
+            .where(F.col("w") >= BUNDLE_MIN_W)
+            .select("u", "v")
+        )
         for _ in range(KCORE_ROUNDS):
             deg = (
                 cur.select(F.col("u").alias("n"))
@@ -803,20 +793,15 @@ def part_bundle_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .agg(F.count("*").alias("d"))
             )
             keep = deg.where(F.col("d") >= KCORE_K).select("n")
-            nxt = (
+            # NO eager count(): every parent cache stays live until the
+            # scope exits, so the single final action materializes
+            # each round's frame lazily (each cached partition computes
+            # once, the round's three consumers read the cache).
+            cur = cache(
                 cur.join(keep.withColumnRenamed("n", "u"), "u", "left_semi")
                 .join(keep.withColumnRenamed("n", "v"), "v", "left_semi")
                 .select("u", "v")
-                .persist()
             )
-            # NO eager count(): every parent cache stays live until the
-            # finally below, so the single final action materializes
-            # each round's frame lazily (each cached partition computes
-            # once, the round's three consumers read the cache) — the
-            # old per-round count() was KCORE_ROUNDS extra full jobs
-            # whose output was discarded.
-            kept_caches.append(nxt)
-            cur = nxt
         dfin = (
             cur.select(F.col("u").alias("p_partkey"))
             .unionAll(cur.select(F.col("v").alias("p_partkey")))
@@ -828,10 +813,6 @@ def part_bundle_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
             .limit(KCORE_TOP)
             .localCheckpoint(eager=True)
         )
-    finally:
-        edges.unpersist()
-        for c in kept_caches:
-            c.unpersist()
 
 
 # --------------------------------------------------------------------------
@@ -919,7 +900,7 @@ def bundle_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     thresholded subset (bounded pair graph); the full edge set joins
     the label frame twice (keyed equi-joins), and everything after is
     label-cardinality sized. TakeOrdered top-{MODULARITY_TOP}."""
-    from open_pulsar_spark.operators.dedup import _pin, closure_labels
+    from open_pulsar_spark.operators.dedup import closure_labels
 
     wpairs = _weighted_edges(spark, sf_dir)
     labels = closure_labels(
@@ -930,7 +911,7 @@ def bundle_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).withColumnRenamed("u", "n")
     la = labels.select(F.col("n").alias("u"), F.col("label").alias("la"))
     lb = labels.select(F.col("n").alias("v"), F.col("label").alias("lb"))
-    le = _pin(
+    le = pin(
         "modularity_le",
         wpairs.join(la, "u", "left")
         .join(lb, "v", "left")
@@ -1278,14 +1259,13 @@ def copurchase_negative_samples(
     Determinism: degree ties in the pool cut break on part id; the
     per-anchor ranking is (md5 hex, candidate id) — total orders
     everywhere."""
-    from open_pulsar_spark.operators.dedup import _pin
 
     edges = _weighted_edges(spark, sf_dir)
     # deg feeds the eager pool cut AND the anchor explode of the main
     # job: pin it so the pool collect (its single first consumer)
     # fills the cache and the main job reads it instead of re-running
     # the union+aggregate over the edge frame (guide §1.2)
-    deg = _pin(
+    deg = pin(
         "negsamp_deg",
         edges.select(F.col("u").alias("pk"), "w")
         .unionAll(edges.select(F.col("v").alias("pk"), "w"))
@@ -1492,9 +1472,8 @@ def part_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     joins against the |parts|-row item counts, a 1-row broadcast N.
     No self-join of the posting list."""
     baskets = _copurchase_baskets(spark, sf_dir)
-    from open_pulsar_spark.operators.dedup import _pin
 
-    baskets = _pin("rules_baskets", baskets)
+    baskets = pin("rules_baskets", baskets)
     n = baskets.agg(F.count("*").cast("bigint").alias("n_baskets"))
     ix = baskets.select(F.explode("ps").alias("pk")).groupBy("pk").agg(
         F.count("*").cast("bigint").alias("nx")

@@ -93,6 +93,7 @@ def salt_expr(key: Column, buckets: int) -> Column:
 # --------------------------------------------------------------------------
 from pyspark.sql import SparkSession  # noqa: E402
 
+from open_pulsar_spark.materialize import run_concurrently  # noqa: E402
 from open_pulsar_spark.registry import query  # noqa: E402
 from open_pulsar_spark.tables import load_table  # noqa: E402
 
@@ -214,10 +215,9 @@ def partition_plan_from_counts(
     from open_pulsar_spark.operators.prefix import global_prefix
 
     c = counts.select("user_id", F.col("cnt").cast("bigint").alias("cnt"))
-    aug, totals, release = global_prefix(
+    with global_prefix(
         spark, c, [F.asc("user_id")], cum_cols=["cnt"]
-    )
-    try:
+    ) as (aug, totals):
         total = int(totals.get("cnt", 0) or 0)
         if total == 0:
             return spark.createDataFrame(
@@ -256,10 +256,8 @@ def partition_plan_from_counts(
             )
             .orderBy("part")
         )
-        # bounded result: materialize before releasing the rank caches
+        # bounded result: collect while the prefix cache is live
         return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        release()
 
 # --------------------------------------------------------------------------
 # events_lateness_profile — the withWatermark() design readout: how late
@@ -363,8 +361,7 @@ def events_lateness_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         # global n/max — the old separate totals pass was a second full
         # scan of the prefix frame for numbers the grid aggregate
         # already had (guide §1.2: don't compute things twice).
-        aug, release = exclusive_prefix_max(spark, ev, orders[model], "es")
-        try:
+        with exclusive_prefix_max(spark, ev, orders[model], "es") as aug:
             late = aug.select(
                 F.greatest(
                     F.coalesce(F.col("prev_max") - F.col("es"), F.lit(0)),
@@ -401,18 +398,16 @@ def events_lateness_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
                 for r in rows
             ]
-        finally:
-            release()
 
     # The two ingest models are independent job chains over the same
-    # input: submit them concurrently so the second model's range
-    # sampling back-fills the first model's stragglers (guide §2.6).
-    from concurrent.futures import ThreadPoolExecutor
-
-    out_rows: list[tuple] = []
-    with ThreadPoolExecutor(max_workers=len(LATENESS_MODELS)) as pool:
-        for rows in pool.map(profile_model, LATENESS_MODELS):
-            out_rows.extend(rows)
+    # input, run side by side.
+    out_rows = [
+        row
+        for rows in run_concurrently(
+            [lambda m=m: profile_model(m) for m in LATENESS_MODELS]
+        )
+        for row in rows
+    ]
     return spark.createDataFrame(out_rows, schema).orderBy(
         "model", "delay_s"
     )

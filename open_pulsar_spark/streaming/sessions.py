@@ -147,8 +147,8 @@ def chat_turns(
 ) -> DataFrame:
     """Wire the chat branch: group by chat_id → stateful handler.
 
-    Works on a streaming frame (state persists across micro-batches
-    via the checkpoint) and on a batch frame (single "batch" of state).
+    Streaming frames only: state persists across micro-batches via the
+    checkpoint, and `applyInPandasWithState` refuses a batch frame.
     Pass `ttl_ms` to evict idle chats by processing-time timeout.
     """
     timeout = (

@@ -801,3 +801,34 @@ def test_no_explode_of_stored_array_columns():
         "InferFiltersFromGenerate exclusion (session.py):\n"
         + "\n".join(hits)
     )
+
+
+def test_materialization_lives_in_one_module():
+    """Every persist, unpersist and driver thread pool goes through
+    open_pulsar_spark/materialize.py (README "Materialization"): its
+    scoped cache and run_concurrently release on the exception path,
+    which a hand-rolled persist…unpersist or executor scaffold does not.
+    The generation-pin helpers moved there from operators/dedup.py."""
+    import pathlib
+    import re
+
+    root = pathlib.Path(__file__).resolve().parents[1] / "open_pulsar_spark"
+    idiom = re.compile(r"\.persist\(|\.cache\(\)|\.unpersist\(|ThreadPoolExecutor")
+    dedup_import = re.compile(
+        r"from open_pulsar_spark\.operators\.dedup import\s*(\([^)]*\)|[^\n]*)"
+    )
+    hits = []
+    for py in sorted(root.rglob("*.py")):
+        if py == root / "materialize.py":
+            continue
+        text = py.read_text()
+        for i, line in enumerate(text.splitlines(), 1):
+            if idiom.search(line):
+                hits.append(f"{py.relative_to(root)}:{i}: {line.strip()}")
+        for m in dedup_import.finditer(text):
+            if {"_pin", "_pin_keyed", "_release"} & set(re.findall(r"\w+", m[1])):
+                hits.append(f"{py.relative_to(root)}: {' '.join(m[0].split())}")
+    assert not hits, (
+        "materialization outside open_pulsar_spark/materialize.py — use "
+        "scoped_cache / pin / run_concurrently:\n" + "\n".join(hits)
+    )

@@ -6,6 +6,10 @@ order-insensitive values (sorted by all columns, compared cell-wise
 with exact equality — floats were already rounded inside the queries,
 so exactness is the point).
 
+Leak gate: after each comparison every generation pin is released,
+and a query that still leaves a cached plan in the session fails as
+LEAK (the cache is then cleared so the next query starts clean).
+
 Usage: python tools/verify_oracle.py [sf_dir] [query ...]
 """
 
@@ -134,6 +138,7 @@ def main() -> None:
     only = set(args[1:])
 
     from open_pulsar_spark import get_spark, registry
+    from open_pulsar_spark.materialize import cache_is_empty, release_pins
 
     if vanilla:
         # replicate the DRIVER's environment: a session with none of
@@ -154,7 +159,7 @@ def main() -> None:
 
     qs = registry.all_queries()
     oracles = registry.all_oracles()
-    failures = 0
+    failures = pinning = pins_total = 0
     for name, qfn in sorted(qs.items()):
         if only and name not in only:
             continue
@@ -162,10 +167,18 @@ def main() -> None:
             res = compare(name, spark, con, sf_dir, qfn, oracles.get(name))
         except Exception as e:  # noqa: BLE001
             res = {"name": name, "status": "ERROR", "error": str(e)[:500]}
+        pins = release_pins()
+        pinning += pins > 0
+        pins_total += pins
+        if not cache_is_empty(spark):
+            if res["status"] in ("OK", "rows_only"):
+                res["status"] = "LEAK"
+            spark.catalog.clearCache()
         ok = res["status"] in ("OK", "rows_only")
         failures += 0 if ok else 1
         print(f"{'PASS' if ok else 'FAIL'} {res}")
-    print(f"\n{'ALL GREEN' if failures == 0 else f'{failures} FAILURES'}")
+    print(f"\n{pinning} queries held {pins_total} pins until released")
+    print(f"{'ALL GREEN' if failures == 0 else f'{failures} FAILURES'}")
     spark.stop()
     sys.exit(1 if failures else 0)
 
